@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registered query at the given scale
   * factor and prints ONE JSON line. A warmup action runs first so JVM
   * startup / first-codegen cost is not attributed to whichever query
@@ -35,17 +33,9 @@ object Bench {
     // turns when executors are memory-tight
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = GraftSession.withJoinStrategy(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // page granularity ∝ memory-per-task — see GraftSession scaladoc
-      .config("spark.buffer.pageSize",
-        GraftSession.tungstenPageSize(cores = cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark =
+      GraftSession.getOrCreate(s"local[$cpus]", shufflePartitions.toInt)
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     val spillListener = new SpillListener
     spark.sparkContext.addSparkListener(spillListener)
     // pre-flight: fail ONCE with a named diff on testdata storage drift

@@ -460,20 +460,12 @@ object Faults {
       case Some(list) => list.split(",").map(_.trim).toSeq
       case None => DefaultQueries
     }
-    val spark = GraftSession.withJoinStrategy(SparkSession.builder()
-      // local[N, 4]: local-mode task retries, maxFailures = 4 — the
-      // injected first-attempt kill leaves 3 more attempts
-      .master(s"local[$cpus, 4]")
+    // local[N, 4]: local-mode task retries, maxFailures = 4 — the
+    // injected first-attempt kill leaves 3 more attempts
+    val spark = GraftSession.builder(s"local[$cpus, 4]", cpus.toInt)
       .config("spark.plugins", "graft.FaultInjectionPlugin")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // page granularity ∝ memory-per-task — see GraftSession scaladoc
-      .config("spark.buffer.pageSize",
-        GraftSession.tungstenPageSize(cores = cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR") // injected failures are noisy at WARN
-    graft.functions.GraftFunctions.register(spark)
     graft.sources.TestdataContract.assertContract(spark, sfDir)
 
     FaultInjectionPlugin.armed.set(armed)

@@ -1,20 +1,23 @@
 package graft
 
-import graft.functions.{GraftExtensions, GraftFunctions}
+import graft.functions.GraftExtensions
+import org.apache.spark.graftbridge.MasterBridge
 import org.apache.spark.sql.SparkSession
 
-/** Opinionated session factory encoding the engine's deployment
-  * configuration — the settings that matter at 100 TB, pre-wired:
+/** The one session factory: every main, the test session and the
+  * benchmark build their session here, so the oracle and the tests run
+  * the configuration that is timed. [[confs]] is the engine's whole
+  * conf list, and [[builder]] adds the extensions:
   *
-  *  - AQE on (runtime re-planning: shuffle coalescing, broadcast
-  *    downgrade, skew-join splitting);
-  *  - skew-join handling explicitly enabled;
   *  - shuffle partitions sized to the actual parallelism instead of
-  *    the 200 default (AQE coalesces down, but the ceiling should
-  *    reflect the cluster);
-  *  - 128 MB scan partitions (`files.maxPartitionBytes` default kept
-  *    explicit — the knob to raise for wide-row tables);
-  *  - UTC session timezone (oracle/cross-engine parity);
+  *    the 200 default (AQE, on by Spark default, coalesces down, but
+  *    the ceiling should reflect the cluster);
+  *  - Tungsten page size derived from the master's task-thread count
+  *    ([[tungstenPageSize]]; `local[N]` and `local[N, F]` give N,
+  *    `local[*]` and any non-local master the JVM's available
+  *    processors);
+  *  - UTC session timezone (oracle/cross-engine parity) and no UI;
+  *  - the shuffled-hash join strategy ([[confs]]);
   *  - the engine's custom Catalyst functions injected via
   *    [[GraftExtensions]] so `cosine_sim` & co. resolve in SQL.
   */
@@ -39,17 +42,25 @@ object GraftSession {
     * this computes the same 64 MiB Spark picks — the knob only moves
     * where memory-per-task is tight, exactly where it must. */
   def tungstenPageSize(heapBytes: Long = Runtime.getRuntime.maxMemory(),
-                       cores: Int =
-                         Runtime.getRuntime.availableProcessors): Long = {
+                       cores: Int): Long = {
     val execPool = ((heapBytes - (300L << 20)) * 0.6).toLong max (64L << 20)
     val raw = execPool / (cores.toLong * 12L)
     val clamped = raw.max(1L << 20).min(64L << 20)
     java.lang.Long.highestOneBit(clamped)
   }
 
-  /** Join-strategy configuration shared by EVERY engine entry point
-    * (bench/verify/scale-bench/tests) — optimization round 19.
+  /** Task threads the master runs: 1 for `local`, N for `local[N]` and
+    * `local[N, F]`, the available processors for `local[*]` and any
+    * non-local master. */
+  def masterThreads(master: String): Int = {
+    val n = MasterBridge.localThreads(master)
+    if (n > 0) n else Runtime.getRuntime.availableProcessors
+  }
+
+  /** Every engine conf, for a session on `master` with
+    * `shufflePartitions` shuffle partitions.
     *
+    * The two join-strategy confs date from optimization round 19.
     * Sort-merge was the de-facto strategy for all non-broadcast joins;
     * the q188 final adaptive plan showed each PageRank iteration
     * re-SORTING the data-sized edge table for its SMJ even though the
@@ -60,7 +71,7 @@ object GraftSession {
     * partition) is exactly the node-sized-state-per-task budget the
     * graph/dedup operators already provision for their aggregations.
     *
-    * Two knobs, both SCALE-ADAPTIVE rather than local-tuned (guide
+    * Both knobs are SCALE-ADAPTIVE rather than local-tuned (guide
     * §3.1/§9):
     *  - `preferSortMergeJoin=false` lets the static planner pick SHJ
     *    when its size conditions hold (stats-based, falls back to SMJ
@@ -74,35 +85,28 @@ object GraftSession {
     * 64 MB per partition matches the advisory shuffle-partition size
     * AQE already targets, so "build fits a partition" and "partition
     * is well-sized" are the same budget. */
-  val joinStrategyConfs: Seq[(String, String)] = Seq(
+  def confs(master: String, shufflePartitions: Int): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+    "spark.buffer.pageSize" ->
+      tungstenPageSize(cores = masterThreads(master)).toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
     "spark.sql.join.preferSortMergeJoin" -> "false",
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" ->
       (64L << 20).toString)
 
-  /** Apply [[joinStrategyConfs]] to a builder. */
-  def withJoinStrategy(b: SparkSession.Builder): SparkSession.Builder =
-    joinStrategyConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+  /** A builder with [[confs]] and [[GraftExtensions]] applied; a caller
+    * chains any conf of its own (Faults' plugin, the test warehouse)
+    * before `getOrCreate`. */
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
+    confs(master, shufflePartitions).foldLeft(
+      SparkSession.builder().master(master).appName("graft")) {
+      case (b, (k, v)) => b.config(k, v)
+    }.withExtensions(new GraftExtensions)
 
-  def builder(master: String = "local[*]",
-              shufflePartitions: Int =
-                Runtime.getRuntime.availableProcessors): SparkSession.Builder =
-    withJoinStrategy(SparkSession.builder()
-      .master(master)
-      .appName("graft")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.files.maxPartitionBytes", (128L << 20).toString)
-      .config("spark.buffer.pageSize", tungstenPageSize().toString)
-      .config("spark.sql.session.timeZone", "UTC"))
-      .withExtensions(new GraftExtensions)
-
-  /** Build (or attach to) a session and ensure the custom functions
-    * are registered even when an existing session is returned
-    * (getOrCreate ignores extensions on reuse). */
-  def getOrCreate(master: String = "local[*]"): SparkSession = {
-    val spark = builder(master).getOrCreate()
-    GraftFunctions.register(spark)
-    spark
-  }
+  /** Build (or attach to) a session. A session built here carries
+    * [[GraftExtensions]], so every custom function resolves without
+    * [[graft.functions.GraftFunctions.register]]. */
+  def getOrCreate(master: String, shufflePartitions: Int): SparkSession =
+    builder(master, shufflePartitions).getOrCreate()
 }

@@ -76,7 +76,7 @@ object IncrementalDeepRun {
       sys.env.getOrElse("SPARK_GRAFT_INCR_FORGET_AFTER", "12").toInt
     require(shards >= 2 && compactEvery >= 1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.getOrCreate(s"local[$cpus]")
+    val spark = GraftSession.getOrCreate(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     import graft.ops.CurationPipeline

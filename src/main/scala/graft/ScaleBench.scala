@@ -132,17 +132,8 @@ object ScaleBench {
     }
     val outDir = s"target/tmp/scalebench_x$copies"
 
-    val spark = GraftSession.withJoinStrategy(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // page granularity ∝ memory-per-task — see GraftSession scaladoc
-      .config("spark.buffer.pageSize",
-        GraftSession.tungstenPageSize(cores = cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession.getOrCreate(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
 
     materialize(spark, sfDir, outDir, copies)
 

@@ -130,10 +130,10 @@ object Graph {
     // CALLER certifies the input is already a set (a just-compacted
     // edge sidecar — see [[pageRankFromEdgeSidecar]]): the distinct is
     // idempotent on distinct input but still costs one corpus-sized
-    // shuffle, and the ProfileQ206 decomposition measured it as ~40%
-    // of the PageRank setup at 10×. Passing true on multi-edge input
-    // is WRONG (duplicate edges would inflate degrees), which is why
-    // the default stays false.
+    // shuffle, and the round-15 q206 decomposition (SURVEY.md)
+    // measured it as ~40% of the PageRank setup at 10×. Passing true
+    // on multi-edge input is WRONG (duplicate edges would inflate
+    // degrees), which is why the default stays false.
     //
     // Optimization round 19: the set-collapse path checkpoints the
     // distinct's OWN output — the old `.distinct().repartition(src)`
@@ -660,7 +660,7 @@ object Graph {
     * was compacted ([[compactEdgeSidecar]]) with NO appends since, so
     * the files are already a distinct edge set and the reader's
     * defensive set-collapse shuffle can be skipped (bit-identical
-    * result by set idempotence — GraphSpec pins it; the ProfileQ206
+    * result by set idempotence — GraphSpec pins it; the round-15 q206
     * decomposition measured the redundant distinct at ~40% of the
     * PageRank setup at 10×). Leave false for a sidecar that may carry
     * uncompacted appends — batches can overlap each other or the

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Exp
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 /** Custom whole-operator: per-group top-k by a numeric score WITHOUT
   * sorting each partition.
@@ -189,12 +188,4 @@ object TopKPerGroup {
     org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(spark,
       TopKPerGroup(keyExprs, scoreExpr, tieExpr, k, analyzed))
   }
-}
-
-/** Planner-strategy injection for shared deployments
-  * (spark.sql.extensions): makes TopKPerGroup plannable in any session
-  * built with [[graft.functions.GraftExtensions]]-style wiring. */
-class TopKExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
-    e.injectPlannerStrategy((_: SparkSession) => TopKStrategy)
 }

@@ -339,7 +339,8 @@ object GraphQueries {
     Graph.compactEdgeSidecar(s, dir)
     // compacted = true: the read follows the compaction with no
     // intervening appends, so the reader skips its defensive distinct
-    // (one corpus-sized shuffle — see the ProfileQ206 decomposition)
+    // (one corpus-sized shuffle — see the round-15 q206 decomposition
+    // in SURVEY.md)
     val pr = Graph.pageRankFromEdgeSidecar(s, dir, iters = Iters,
       compacted = true)
     val w = Window.partitionBy("kind").orderBy(col("rank_fp").desc, col("node"))

@@ -203,9 +203,6 @@ object Multimodal {
         } finally in.close()
       } catch { case _: Exception => None }
 
-    def pcm16le(payload: Array[Byte]): Option[Array[Byte]] =
-      pcm16leWithFormat(payload).map(_._2)
-
     /** Decode + downmix in one seam: payload → the canonical MONO
       * 16-bit sample stream (per time step, the truncating integer
       * mean of the interleaved channel samples; whole time steps

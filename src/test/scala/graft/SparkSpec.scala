@@ -7,17 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * Every suite (ScalaTest and ScalaCheck) must go through this object:
   * getOrCreate ignores the configs of any later builder, so a suite
   * building its own differently-configured session would silently
-  * change behavior for everyone else. */
+  * change behavior for everyone else. It runs the conf list of
+  * [[GraftSession.confs]], as every main does. */
 object TestSession {
-  lazy val spark: SparkSession = GraftSession.withJoinStrategy(
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString))
+  lazy val spark: SparkSession = GraftSession.builder("local[4]", 4)
+    .config("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-wh").toString)
     .getOrCreate()
 }
 

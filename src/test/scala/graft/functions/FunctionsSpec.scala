@@ -428,16 +428,12 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects cosine_sim at session build time") {
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    // getOrCreate may return the shared session; extensions are only
-    // guaranteed on a fresh one, so just assert resolution works here.
-    GraftFunctions.register(s2)
-    assert(s2.sql("SELECT cosine_sim(array(1.0d), array(1.0d))")
+    // the shared session is built by GraftSession.builder, which
+    // applies the extensions; the planner strategy arrives only through
+    // them
+    assert(spark.sessionState.planner.extraPlanningStrategies
+      .contains(graft.plans.TopKStrategy))
+    assert(spark.sql("SELECT cosine_sim(array(1.0d), array(1.0d))")
       .collect()(0).getDouble(0) === 1.0)
   }
 }

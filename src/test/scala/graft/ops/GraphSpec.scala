@@ -268,7 +268,7 @@ class GraphSpec extends SparkSpec {
     assert(afterCompact === direct)
     // compacted = true right after compaction: the reader's defensive
     // distinct is skipped, the ranks are bit-identical (set idempotence
-    // — the shuffle it saves is the ProfileQ206 setup finding)
+    // — the shuffle it saves is the round-15 q206 setup finding)
     val compactedFast = Graph.pageRankFromEdgeSidecar(spark, dir,
         compacted = true)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
